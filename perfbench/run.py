@@ -1,6 +1,6 @@
 """Benchmark command for the engine (see BENCHMARK.json).
 
-Run from the repository root:
+Usage:
 
     python3 perfbench/run.py --workload paper_pipeline --seed 1 --seconds 1 --trace 0
 
@@ -8,7 +8,8 @@ One invocation generates the workload's input from ``--seed``, computes the
 oracle's expected result, starts the engine on ``local[<cpus>]``, runs the
 untimed warm-up, then runs the workload in a closed loop (one client, the
 next run starts when the previous one ends) until ``--seconds`` of run time
-are measured. Every operation is checked against the oracle after the loop.
+are measured. Every operation, the warm-up's too, is checked against the
+oracle after the loop; one that raised is a failed operation.
 ``--trace 1`` then repeats as many runs with layer spans on and reports the
 per-layer counters plus the tracing overhead instead of the end-to-end
 metrics. Human-readable lines come first; the last stdout line is the JSON
@@ -27,13 +28,12 @@ import sys
 import time
 import traceback
 
-ROOT = os.getcwd()
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # The end-to-end metrics BENCHMARK.json gates. The others are printed
 # only: on this class of machine their spread across seeds is as wide as
 # the largest bound allowed, so a gate on them would reject at random.
 E2E_UNITS = {"setup_s": "s", "wall_s": "s", "ok_frac": "frac"}
 WARMUP_RUNS = 1
-REQUIRED = ("skripsi_mapreduce_spark/session.py", "tools/gen_scaledata.py", "tests/oracles.py")
 
 
 def tail(values: list[float]) -> tuple[float, float]:
@@ -85,7 +85,7 @@ def _stop(spark) -> None:
 
 
 class Loop:
-    """Runs of one kind (untraced or traced) and their checked operations."""
+    """Runs of one kind (warm-up, measured or traced) and their checked operations."""
 
     def __init__(self):
         self.walls: list[float] = []
@@ -129,9 +129,8 @@ class Loop:
         return len(self.ops) + self.errors
 
 
-def bench(w, args, workdir: str, corrupt=None) -> dict:
-    """One invocation of workload ``w``; ``corrupt`` (tests only) alters
-    the oracle's expected result."""
+def bench(w, args, workdir: str) -> dict:
+    """One invocation of workload ``w``."""
     from perfbench.spans import UNITS, Memory, Tracer, layer_totals
     from skripsi_mapreduce_spark.session import get_spark
 
@@ -141,8 +140,6 @@ def bench(w, args, workdir: str, corrupt=None) -> dict:
     t = time.perf_counter()
     expected = w.expected(inp)
     oracle_s = time.perf_counter() - t
-    if corrupt:
-        expected = corrupt(expected)
 
     runs = itertools.count()
 
@@ -156,13 +153,8 @@ def bench(w, args, workdir: str, corrupt=None) -> dict:
         mem = Memory(spark)
         mem.reset()
         off = Tracer(spark, enabled=False)
-        warm = []
-        for _ in range(WARMUP_RUNS):
-            out = fresh()
-            t = time.perf_counter()
-            w.run(spark, off, inp, out)
-            warm.append(time.perf_counter() - t)
-            shutil.rmtree(out, ignore_errors=True)
+        warm = Loop()
+        warm_s = [warm.run_once(w, spark, off, inp, fresh()) for _ in range(WARMUP_RUNS)]
         setup_s = time.perf_counter() - t_setup
 
         plain = Loop()
@@ -178,20 +170,19 @@ def bench(w, args, workdir: str, corrupt=None) -> dict:
                 traced.run_once(w, spark, tr, inp, fresh())
                 traced.layers.append(layer_totals(spark, tr.spans))
 
-        failed = plain.check(w, spark, expected) + traced.check(w, spark, expected)
+        loops = (warm, plain, traced)
+        failed = sum(loop.check(w, spark, expected) for loop in loops)
     finally:
         _stop(spark)
 
-    attempted = plain.attempted + traced.attempted
-    if not plain.walls or (args.trace and not traced.walls):
-        raise RuntimeError(f"{w.name}: no run completed")
-
-    wall_s = statistics.median(plain.walls)
+    attempted = sum(loop.attempted for loop in loops)
+    # None when no run completed: the result then leaves out what needs one
+    wall_s = statistics.median(plain.walls) if plain.walls else None
     info = [
         ("gen_s", gen_s, "s", 1),
         ("oracle_s", oracle_s, "s", 1),
         ("session_start_s", start_s, "s", 1),
-        ("warmup_run_s", statistics.median(warm) if warm else 0.0, "s", len(warm)),
+        ("warmup_run_s", statistics.median(warm_s) if warm_s else 0.0, "s", len(warm_s)),
         ("failed_frac", failed / attempted, "frac", attempted),
         (f"items ({w.item})", w.items, "count", 1),
     ]
@@ -201,25 +192,39 @@ def bench(w, args, workdir: str, corrupt=None) -> dict:
             run["session.start_s"] = run["session.busy_s"] = start_s
             it = run.get("kmeans.iterations", 0)
             run["kmeans.s_per_iter"] = run["kmeans.busy_s"] / it if it else 0.0
-            run["trace.overhead_s"] = statistics.median(traced.walls) - wall_s
         metrics = {
             key: (statistics.median(run.get(key, 0.0) for run in traced.layers), unit, n)
             for key, unit in UNITS.items()
+            if key != "trace.overhead_s"
         }
+        if wall_s is not None and traced.walls:
+            overhead = statistics.median(traced.walls) - wall_s
+            metrics["trace.overhead_s"] = (overhead, UNITS["trace.overhead_s"], n)
     else:
-        lat = [lat for _, lat, _ in plain.ops]
-        tail_s, tail_pct = tail(lat)
-        info += [
-            ("items_per_s", w.items / wall_s, "1/s", len(plain.walls)),
-            ("query_p50_s", statistics.median(lat), "s", len(lat)),
-            (f"query_tail_s (p{tail_pct:.4g})", tail_s, "s", len(lat)),
-            ("peak_rss_mb", peak_mb, "MB", 1),
-        ]
         values = {
             "setup_s": (setup_s, 1),
-            "wall_s": (wall_s, len(plain.walls)),
             "ok_frac": (1.0 - failed / attempted, attempted),
         }
+        if wall_s is not None:
+            values["wall_s"] = (wall_s, len(plain.walls))
+            lat = [lat for _, lat, _ in plain.ops]
+            tail_s, tail_pct = tail(lat)
+            info += [
+                ("items_per_s", w.items / wall_s, "1/s", len(plain.walls)),
+                ("query_p50_s", statistics.median(lat), "s", len(lat)),
+                (f"query_tail_s (p{tail_pct:.4g})", tail_s, "s", len(lat)),
+                ("peak_rss_mb", peak_mb, "MB", 1),
+            ]
+            # each operation by name, printed only: a trade between the
+            # entries of one workload nets out in wall_s but shows here
+            by_op: dict[str, list[float]] = {}
+            for op, lat_s, _ in plain.ops:
+                by_op.setdefault(op, []).append(lat_s)
+            if len(by_op) > 1:
+                info += [
+                    (f"latency_s[{op}]", statistics.median(xs), "s", len(xs))
+                    for op, xs in by_op.items()
+                ]
         metrics = {k: (v, E2E_UNITS[k], n) for k, (v, n) in values.items()}
     for name, value, unit, n in info + [(k, *v) for k, v in metrics.items()]:
         print(f"{w.name} {name} = {value:.6g} {unit} (n={n})")
@@ -234,10 +239,6 @@ def bench(w, args, workdir: str, corrupt=None) -> dict:
 
 def main(argv=None) -> int:
     args = _parse(argv)
-    missing = [p for p in REQUIRED if not os.path.isfile(os.path.join(ROOT, p))]
-    if missing:
-        print(f"perfbench: run from the repository root; missing {missing}", file=sys.stderr)
-        return 2
     sys.path[0] = ROOT
     from perfbench.workloads import WORKLOADS
 

@@ -9,6 +9,7 @@ import filecmp
 import json
 import os
 import re
+import subprocess
 import sys
 
 import pytest
@@ -91,6 +92,40 @@ def test_driver_gap_uses_self_time_minus_stage_time():
     assert covered == pytest.approx(1.0 + 2.0)
 
 
+RAISING_RUN = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from perfbench import run
+from perfbench.workloads import DeclaredQueries
+
+def boom(*args):
+    raise RuntimeError("deliberate failure")
+
+w = DeclaredQueries()
+w.QUERY_NAMES, w.size, w.run = ("q01_scan_project",), 0.001, boom
+args = run._parse(["--workload", w.name, "--seed", "5", "--seconds", "0.1"])
+print(json.dumps(run.bench(w, args, sys.argv[2])))
+"""
+
+
+def test_raising_runs_are_reported_as_failed(tmp_path):
+    """A run that raises, the warm-up's included, is a failed operation,
+    and the result is still printed. In a process of its own: ``bench``
+    starts and stops its own Spark session."""
+    env = {**os.environ, "SPARK_GRAFT_CPUS": str(len(os.sched_getaffinity(0)))}
+    proc = subprocess.run(
+        [sys.executable, "-c", RAISING_RUN, ROOT, str(tmp_path)],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    # the warm-up run and the first measured run raise; the loop stops there
+    assert result["attempted"] == 2 and result["failed"] == 2
+    assert result["correct"] is False
+    assert set(result["metrics"]) == {"setup_s", "ok_frac"}
+    assert result["metrics"]["ok_frac"]["value"] == 0.0
+
+
 @pytest.fixture(scope="module")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
@@ -128,10 +163,14 @@ def test_wrong_expected_result_raises_failed_frac(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(run, "WARMUP_RUNS", 0)
     args = run._parse(["--workload", w.name, "--seed", "5", "--seconds", "0.1"])
 
-    def corrupt(expected):
+    orig = w.expected
+
+    def corrupt(inp):
+        expected = orig(inp)
         return {**expected, "q03_tpch_q1": expected["q03_tpch_q1"] + [("wrong",)]}
 
-    result = run.bench(w, args, str(tmp_path), corrupt=corrupt)
+    monkeypatch.setattr(w, "expected", corrupt)
+    result = run.bench(w, args, str(tmp_path))
     assert result["attempted"] == 2 and result["failed"] == 1
     assert result["correct"] is False
     assert result["metrics"]["ok_frac"]["value"] == 0.5

@@ -13,6 +13,7 @@ import itertools
 import json
 import math
 import os
+import sys
 import time
 import traceback
 from contextlib import contextmanager
@@ -20,6 +21,7 @@ from contextlib import contextmanager
 import duckdb
 from pyspark.sql import functions as F
 
+from skripsi_mapreduce_spark import plans
 from skripsi_mapreduce_spark.cli import _read_wordlist
 from skripsi_mapreduce_spark.io import write_parquet
 from skripsi_mapreduce_spark.operators import components
@@ -132,23 +134,24 @@ def _duckdb_rows(tables: dict[str, str], sql: str) -> tuple[list[str], list[tupl
         con.close()
 
 
+# io's public functions that the plan modules bind at import time
+IO_NAMES = ("load_table", "table_row_count", "table_column_max")
+
+
 @contextmanager
 def _layer_spans(tr, out: str):
-    """While tracing, route the registry's calls into the dedup and
-    components layers through spans of their own. Their outputs are lazy,
-    so each span also writes its output and hands the re-read table on:
-    the layer's work then runs inside its own span."""
+    """While tracing, route the registry's calls into the io, dedup and
+    components layers through spans of their own. An io span covers the
+    table open (the parquet schema read, footer statistics); the scan's
+    tasks run in the query's action. dedup and components outputs are
+    lazy, so each of their spans also writes its output and hands the
+    re-read table on: the layer's work then runs inside its own span."""
     if not tr.enabled:
         yield
         return
-    targets = [
-        (dd, "minhash_dup_edges", "dedup"),
-        (dd, "minhash_near_dups_against", "dedup"),
-        (components, "connected_components", "components"),
-    ]
     written = itertools.count()
 
-    def traced(fn, layer):
+    def materialized(fn, layer):
         def call(*args, **kwargs):
             with tr.span(layer, fn.__name__):
                 df = fn(*args, **kwargs)
@@ -158,9 +161,31 @@ def _layer_spans(tr, out: str):
 
         return call
 
-    originals = [(mod, name, getattr(mod, name)) for mod, name, _ in targets]
-    for mod, name, layer in targets:
-        setattr(mod, name, traced(getattr(mod, name), layer))
+    def spanned(fn, layer):
+        def call(*args, **kwargs):
+            with tr.span(layer, fn.__name__):
+                return fn(*args, **kwargs)
+
+        return call
+
+    targets = [
+        (dd, "minhash_dup_edges", materialized, "dedup"),
+        (dd, "minhash_near_dups_against", materialized, "dedup"),
+        (components, "connected_components", materialized, "components"),
+    ]
+    plan_modules = [
+        mod for name, mod in list(sys.modules.items())
+        if name.startswith(f"{plans.__name__}.")
+    ]
+    targets += [
+        (mod, name, spanned, "io")
+        for mod in plan_modules
+        for name in IO_NAMES
+        if hasattr(mod, name)
+    ]
+    originals = [(mod, name, getattr(mod, name)) for mod, name, _, _ in targets]
+    for mod, name, wrap, layer in targets:
+        setattr(mod, name, wrap(getattr(mod, name), layer))
     try:
         yield
     finally:
