@@ -17,20 +17,25 @@ Semantics contract (cited to /root/reference/):
   loop runs AT MOST m-1 times (App.java:122-145, §8 Q4), reproduced here.
 - Empty clusters silently vanish (k shrinks), as in the reference (§2.3).
 
-Scale design: one Spark job per iteration (vs the reference's five
-materialization boundaries per iteration, §3.4). Centroids are k x |active
-vocab| — small — so they move driver->executors as a BROADCAST table
+Scale design: each Lloyd step is ONE aggregation — a shuffle-map job and
+one bounded collect (vs the reference's five materialization boundaries
+per iteration, §3.4) — built with a constant number of driver calls.
+Documents are grouped once into word-sorted sparse vectors and
+checkpointed; every step reads that table, so plan depth stays O(1), not
+O(m), with no per-step checkpoint. Centroids are k x |active vocab| —
+small — so they move driver->executors inside the plan as one JSON literal
 (replacing the per-task distributed-cache load, MapperKMean.java:55-80
-O30); documents never leave their partitions except for the one
-groupBy(cluster, word) shuffle of the update step, which Catalyst
-partial-aggregates map-side. Distance uses the sparse-safe expansion
-||x||^2 + ||c||^2 - 2x.c (the reference's dense nested loop,
-MapperKMean.java:88-92, NPEs on missing keys — §8 Q10). Per-iteration
-lineage is cut with localCheckpoint so plan depth stays O(1), not O(m).
+O30), or as a BROADCAST table past ``CENTROID_LITERAL_CAP``. Documents
+never leave their partitions except for the update step's
+groupBy(cluster, word) shuffle, which Catalyst partial-aggregates map-side
+and which also carries each cluster's size and SSE. Distance uses the
+sparse-safe expansion ||x||^2 + ||c||^2 - 2x.c (the reference's dense
+nested loop, MapperKMean.java:88-92, NPEs on missing keys — §8 Q10).
 """
 
 from __future__ import annotations
 
+import json
 import random
 from dataclasses import dataclass, field
 
@@ -42,15 +47,23 @@ from ..io import local_df
 
 
 # The literal-centroid assign path embeds every centroid weight in the
-# plan as a map literal; past this many total (cluster, word) entries the
-# plan itself becomes the bottleneck and assignment falls back to the
+# plan as one JSON literal; past this many total (cluster, word) entries
+# the plan itself becomes the bottleneck and assignment falls back to the
 # broadcast-join path (the 100 TB shape, where centroids are a table).
+# Both paths give the same rows.
 CENTROID_LITERAL_CAP = 20_000
+_CENTROIDS_SCHEMA = "array<struct<cluster:int,c2:double,m:map<string,double>>>"
 
 
 @dataclass
 class KMeansResult:
-    assignments: DataFrame  # (doc_id, cluster, dist2)
+    """``assignments`` is LAZY: (doc_id, cluster, dist2) of the last
+    Lloyd step's assignment pass (the same centroids as ``centroids`` when
+    ``converged``), re-run by each action over the checkpointed document
+    vectors — one map-only pass on the literal path, no Lloyd loop.
+    ``sse`` is that pass's per-cluster SSE, ``history`` every step's."""
+
+    assignments: DataFrame
     centroids: dict[int, dict[str, float]]
     sse: dict[int, float]
     iterations: int
@@ -110,15 +123,11 @@ def kmeans(
         F.col(word_col).alias("word"),
         F.col(weight_col).cast("double").alias("weight"),
     )
-    feats = feats.localCheckpoint(eager=True)  # reused every iteration
-
-    # Per-document sparse vector + ||x||^2, computed once. The entries
-    # array feeds the literal-centroid assign (distances map-side, no
-    # shuffle) and the centroid update; doc_norms feeds the join-based
-    # assign fallback.
-    # entries sorted by word: the literal-assign dot product folds over
-    # this array, and a canonical fold order keeps dist2 ULP-identical
-    # across runs/partitionings (collect_list order is shuffle luck)
+    # Per-document sparse vector + ||x||^2, computed once; every later
+    # pass reads only this checkpoint. Entries are sorted by word: the
+    # literal-assign dot product folds over this array, and a canonical
+    # fold order keeps dist2 ULP-identical across runs/partitionings
+    # (collect_list order is shuffle luck).
     docs_vec = (
         feats.groupBy("doc_id")
         .agg(
@@ -127,7 +136,23 @@ def kmeans(
         )
         .localCheckpoint(eager=True)
     )
+    # the long form again, map-only over the checkpoint: it feeds the seed
+    # centroids and the join-based assign, whose per-document dot sums then
+    # run in the same word order as the literal path's fold
+    feats = docs_vec.select("doc_id", F.inline("entries"))
     doc_norms = docs_vec.select("doc_id", "x2")
+    # the centroid literal is JSON, whose map keys are strings: other word
+    # types take the join path
+    literal_words = isinstance(feats.schema["word"].dataType, T.StringType)
+
+    def assign(centroids: dict[int, dict[str, float]], with_entries: bool) -> DataFrame:
+        """(doc_id, cluster, dist2), plus the document's entries when
+        asked: every document with its nearest centroid."""
+        if literal_words and sum(len(v) for v in centroids.values()) <= CENTROID_LITERAL_CAP:
+            out = _assign_literal(docs_vec, centroids)
+            return out if with_entries else out.drop("entries")
+        out = _assign(spark, feats, doc_norms, centroids)
+        return docs_vec.select("doc_id", "entries").join(out, "doc_id") if with_entries else out
 
     n_docs, min_id, max_id = doc_norms.agg(
         F.count("*"), F.min("doc_id"), F.max("doc_id")
@@ -155,54 +180,59 @@ def kmeans(
             r["doc_id"]: pos2cluster[r["_pos"]]
             for r in ranked.filter(F.col("_pos").isin(list(pos2cluster))).collect()
         }
-    seed_ids = local_df(
-        spark, [(d, c) for d, c in id2cluster.items()], "doc_id long, cluster int"
-    )
-    centroids_df = feats.join(F.broadcast(seed_ids), "doc_id").select(
-        "cluster", "word", F.col("weight").alias("cweight")
-    )
-    centroids = _collect_centroids(centroids_df)
+    seed_rows = feats.filter(F.col("doc_id").isin(list(id2cluster))).collect()
+    centroids = _by_cluster((id2cluster[r["doc_id"]], r["word"], r["weight"]) for r in seed_rows)
 
     limit = max_iter - 1 if parity_max_iter_off_by_one else max_iter
     history: list[dict[int, float]] = []
     converged = False
     iterations = 0
-    assignments = None
+    assigned_with = centroids  # the centroids of the last assignment pass
+
+    # One aggregation per step, the assignment pass its only consumer (so
+    # nothing is checkpointed): per-(cluster, word) weight sums, plus one
+    # sentinel entry per document carrying dist2 under the key
+    # (-1 - cluster, null), whose count and sum are the cluster's size and
+    # SSE. Clusters are >= 0, so no real (cluster, word) key, not even a
+    # null word, meets a sentinel key.
+    sentinel = F.struct(
+        F.lit(None).cast(feats.schema["word"].dataType).alias("word"),
+        F.col("dist2").alias("weight"),
+    )
+    update_cols = [
+        "cluster",
+        F.size("entries").alias("n_words"),
+        F.posexplode(F.concat("entries", F.array(sentinel))).alias("pos", "e"),
+    ]
+    key = F.when(F.col("pos") == F.col("n_words"), -1 - F.col("cluster")).otherwise(
+        F.col("cluster")
+    )
 
     for _ in range(max(limit, 0)):
         iterations += 1
-        # localCheckpoint: assignments feed three aggregations + the next
-        # iteration; pin them once instead of recomputing the join, and cut
-        # lineage so plan depth stays O(1) across iterations.
-        if sum(len(v) for v in centroids.values()) <= CENTROID_LITERAL_CAP:
-            # small centroids: distances computed map-side against literal
-            # maps — the whole assign pass is shuffle-free, and the update
-            # explodes the already-assigned vectors (one shuffle total)
-            assigned = _assign_literal(docs_vec, centroids).localCheckpoint(eager=True)
-            assignments = assigned.select("doc_id", "cluster", "dist2")
-            new_rows = (
-                assigned.select("cluster", F.explode("entries").alias("e"))
-                .groupBy("cluster", F.col("e.word").alias("word"))
-                .agg(F.sum("e.weight").alias("wsum"))
-            )
-        else:
-            assignments = _assign(spark, feats, doc_norms, centroids).localCheckpoint(
-                eager=True
-            )
-            new_rows = (
-                feats.join(assignments.select("doc_id", "cluster"), "doc_id")
-                .groupBy("cluster", "word")
-                .agg(F.sum("weight").alias("wsum"))
-            )
-        # one aggregation job for sizes + SSE (k rows collected)
-        stats = assignments.groupBy("cluster").agg(
-            F.count("*").alias("n"), F.sum("dist2").alias("sse")
-        ).collect()
-        sizes = {r["cluster"]: r["n"] for r in stats}
-        sse = {r["cluster"]: r["sse"] for r in stats}
+        assigned_with = centroids
+        # the limit keeps the trigger below exact: more than
+        # max_centroid_entries real rows are collected iff they exist,
+        # since at most len(centroids) sentinel rows ride along
+        rows = (
+            assign(centroids, with_entries=True)
+            .select(*update_cols)
+            .groupBy(key.alias("cluster"), F.col("e.word").alias("word"))
+            .agg(F.sum("e.weight").alias("wsum"), F.count("*").alias("n"))
+            .limit(max_centroid_entries + len(centroids) + 1)
+            .collect()
+        )
+        sizes: dict[int, int] = {}
+        sse: dict[int, float] = {}
+        sums = []
+        for r in rows:
+            if r["cluster"] < 0:
+                sizes[-1 - r["cluster"]] = r["n"]
+                sse[-1 - r["cluster"]] = r["wsum"]
+            else:
+                sums.append(r)
         history.append(sse)
-        new_centroid_rows = new_rows.limit(max_centroid_entries + 1).collect()
-        if len(new_centroid_rows) > max_centroid_entries:
+        if len(sums) > max_centroid_entries:
             raise RuntimeError(
                 f"k-means centroid update exceeds max_centroid_entries="
                 f"{max_centroid_entries} (k x |active vocab| rows collected to "
@@ -210,12 +240,9 @@ def kmeans(
                 "vocabularies use kmeans_ml or kmeans_fixedpoint, whose "
                 "centroids stay distributed."
             )
-        new_centroids: dict[int, dict[str, float]] = {}
-        for row in new_centroid_rows:
-            c = row["cluster"]
-            new_centroids.setdefault(c, {})[row["word"]] = _round10(
-                row["wsum"] / sizes[c]
-            )
+        new_centroids = _by_cluster(
+            (r["cluster"], r["word"], _round10(r["wsum"] / sizes[r["cluster"]])) for r in sums
+        )
         # O37 convergence: exact equality of rounded maps; only clusters
         # present in the OLD map are checked (JobClustering.java:229-231),
         # and empty clusters disappear.
@@ -225,8 +252,10 @@ def kmeans(
             break
         centroids = new_centroids
 
-    if assignments is None:  # max_iter <= 1: parity loop never runs
-        assignments = _assign(spark, feats, doc_norms, centroids)
+    # lazy: one more assignment pass over the checkpointed docs_vec,
+    # map-only on the literal path, run by the caller's action
+    assignments = assign(assigned_with, with_entries=False)
+    if iterations == 0:  # max_iter <= 1: parity loop never runs
         sse = {
             r["cluster"]: r["sse"]
             for r in assignments.groupBy("cluster").agg(F.sum("dist2").alias("sse")).collect()
@@ -1327,43 +1356,51 @@ def kmeans_ml(
 def _assign_literal(
     docs_vec: DataFrame, centroids: dict[int, dict[str, float]]
 ) -> DataFrame:
-    """Shuffle-free assignment pass over pre-collected sparse vectors.
+    """Shuffle-free assignment pass over pre-collected sparse vectors:
+    (doc_id, entries, cluster, dist2).
 
-    Each centroid becomes a word->weight MAP LITERAL in the plan; the dot
-    product folds over the document's own entries (sparse, exactly the
-    terms the join path sums), dist2 = max(||x||^2 + ||c||^2 - 2x.c, 0)
-    as in ``_assign``, and the argmin is ``array_min`` over
-    (dist2, cluster) structs — lexicographic struct ordering reproduces
-    the min_by tie-break (lowest cluster on equal distance) exactly."""
-    cand = []
-    for c in sorted(centroids):
-        vec = centroids[c]
-        c2 = sum(v * v for v in vec.values())
-        cmap = F.create_map(
-            *[lit for w in sorted(vec) for lit in (F.lit(w), F.lit(float(vec[w])))]
-        )
+    All centroids enter the plan as ONE JSON string literal, which
+    ``from_json`` parses and Catalyst constant-folds into an array of
+    (cluster, ||c||^2, word->weight map) structs; Python's float repr
+    round-trips exactly through the JSON parser. One ``transform`` over
+    that array folds each centroid's dot product over the document's own
+    word-sorted entries, dist2 = max(||x||^2 + ||c||^2 - 2x.c, 0) as in
+    ``_assign``, and ``array_min`` over the (dist2, cluster) structs is
+    the argmin — lexicographic struct ordering reproduces the min_by
+    tie-break (lowest cluster on equal distance) exactly. The argmin is
+    projected once and its two fields read from that column."""
+    payload = json.dumps(
+        [{"cluster": c, "c2": _norm2(centroids[c]), "m": centroids[c]} for c in sorted(centroids)]
+    )
+    cents = F.from_json(F.lit(payload), _CENTROIDS_SCHEMA)
+
+    def candidate(c):
         dot = F.aggregate(
-            F.col("entries"),
+            "entries",
             F.lit(0.0),
             lambda acc, e: acc
-            + e["weight"] * F.coalesce(F.element_at(cmap, e["word"]), F.lit(0.0)),
+            + e["weight"] * F.coalesce(F.element_at(c["m"], e["word"]), F.lit(0.0)),
         )
-        dist2 = F.greatest(F.col("x2") + F.lit(float(c2)) - 2 * dot, F.lit(0.0))
-        cand.append(F.struct(dist2.alias("dist2"), F.lit(c).cast("int").alias("cluster")))
-    best = F.array_min(F.array(*cand))
-    return docs_vec.select(
-        "doc_id",
-        "entries",
-        F.col("x2"),
-        best["cluster"].alias("cluster"),
-        best["dist2"].alias("dist2"),
+        dist2 = F.greatest(F.col("x2") + c["c2"] - 2 * dot, F.lit(0.0))
+        return F.struct(dist2.alias("dist2"), c["cluster"].alias("cluster"))
+
+    best = F.array_min(F.transform(cents, candidate))
+    return docs_vec.select("doc_id", "entries", best.alias("best")).select(
+        "doc_id", "entries", "best.cluster", "best.dist2"
     )
 
 
-def _collect_centroids(centroids_df: DataFrame) -> dict[int, dict[str, float]]:
-    out: dict[int, dict[str, float]] = {}
-    for row in centroids_df.collect():
-        out.setdefault(row["cluster"], {})[row["word"]] = row["cweight"]
+def _norm2(vec: dict[str, float]) -> float:
+    return sum(v * v for v in vec.values())
+
+
+def _by_cluster(entries) -> dict[int, dict]:
+    """(cluster, word, weight) triples -> {cluster: {word: weight}}, words
+    inserted in sorted order: the order ``_norm2`` sums in, so ||c||^2 does
+    not depend on collect order."""
+    out: dict[int, dict] = {}
+    for c, w, v in sorted(entries, key=lambda t: (t[0], t[1] is not None, t[1])):
+        out.setdefault(c, {})[w] = v
     return out
 
 
@@ -1388,10 +1425,17 @@ def _assign(
     c_rows = [
         (c, w, wt) for c, vec in centroids.items() for w, wt in vec.items()
     ]
-    c_df = local_df(spark, c_rows, "cluster int, word string, cweight double")
+    c_schema = T.StructType(
+        [
+            T.StructField("cluster", T.IntegerType()),
+            feats.schema["word"],
+            T.StructField("cweight", T.DoubleType()),
+        ]
+    )
+    c_df = local_df(spark, c_rows, c_schema)
     c_norms = local_df(
         spark,
-        [(c, sum(v * v for v in vec.values())) for c, vec in centroids.items()],
+        [(c, _norm2(vec)) for c, vec in centroids.items()],
         "cluster int, c2 double",
     )
     dots = (

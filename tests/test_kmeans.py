@@ -4,9 +4,12 @@ iteration count, and convergence flag; empty-cluster shrink semantics."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from skripsi_mapreduce_spark.operators import kmeans as km
 from skripsi_mapreduce_spark.operators.kmeans import init_centroid_ids, kmeans
 from skripsi_mapreduce_spark.operators.tfidf import tfidf_long
 
@@ -98,6 +101,132 @@ def test_kmeans_centroid_bound_enforced(spark, corpus, features):
     hatches in the error."""
     with pytest.raises(RuntimeError, match="kmeans_ml|kmeans_fixedpoint"):
         kmeans(spark, features, k=3, max_iter=3, seed=42, max_centroid_entries=2)
+
+
+def _rows(res):
+    """(doc_id, cluster, dist2 bits) of a result's assignments."""
+    return sorted(
+        (r["doc_id"], r["cluster"], r["dist2"].hex()) for r in res.assignments.collect()
+    )
+
+
+def _both_paths(spark, monkeypatch, feats, **kw):
+    """kmeans() on the literal-centroid path and, with the literal cap at
+    0, on the broadcast-join path; asserts the two give the same result."""
+    lit = kmeans(spark, feats, **kw)
+    with monkeypatch.context() as m:
+        m.setattr(km, "CENTROID_LITERAL_CAP", 0)
+        join = kmeans(spark, feats, **kw)
+    assert _rows(lit) == _rows(join)
+    assert lit.centroids == join.centroids
+    assert lit.sse == join.sse
+    assert (lit.iterations, lit.converged) == (join.iterations, join.converged)
+    return lit
+
+
+def _check_oracle(res, vecs, k, max_iter, seed):
+    """Assignments exact, centroids to 10dp, SSE to rel 1e-9 against the
+    Python oracle, which draws its seeds over the rank of the doc ids."""
+    ids = sorted(vecs)
+    a_exp, c_exp, sse_exp, it_exp, conv_exp = kmeans_oracle(
+        {p: vecs[d] for p, d in enumerate(ids, 1)}, k, max_iter, seed
+    )
+    got = {r["doc_id"]: r["cluster"] for r in res.assignments.collect()}
+    assert got == {ids[p - 1]: c for p, c in a_exp.items()}
+    assert (res.iterations, res.converged) == (it_exp, conv_exp)
+    assert {c: set(v) for c, v in res.centroids.items()} == {
+        c: set(v) for c, v in c_exp.items()
+    }
+    for c, vec in c_exp.items():
+        for w, v in vec.items():
+            assert res.centroids[c][w] == pytest.approx(v, abs=2e-10), (c, w)
+    assert set(res.sse) == set(sse_exp)
+    for c, v in sse_exp.items():
+        assert res.sse[c] == pytest.approx(v, rel=1e-9, abs=1e-12)
+
+
+def _long_form(spark, vecs):
+    rows = [(d, w, float(v)) for d, vec in vecs.items() for w, v in vec.items()]
+    return spark.createDataFrame(rows, "doc_id long, word string, weight double")
+
+
+def test_kmeans_assign_paths_agree(spark, monkeypatch, features):
+    """The literal-centroid and broadcast-join assign paths give identical
+    (doc_id, cluster, dist2) rows, centroids, SSE and iteration count."""
+    res = _both_paths(spark, monkeypatch, features, k=3, max_iter=10, seed=42)
+    assert res.iterations > 1
+
+
+def test_kmeans_exact_tie_goes_to_lowest_cluster(spark, monkeypatch):
+    """Doc 3 sits at distance exactly 1.0 from both seed centroids: the
+    lower cluster index wins, on both assign paths."""
+    vecs = {1: {"a": 1.0}, 2: {"b": 1.0}, 3: {"a": 1.0, "b": 1.0}}
+    seed = next(s for s in range(100) if set(init_centroid_ids(3, 2, s)) == {1, 2})
+    res = _both_paths(spark, monkeypatch, _long_form(spark, vecs), k=2, max_iter=2, seed=seed)
+    _check_oracle(res, vecs, 2, 2, seed)
+    seeds = init_centroid_ids(3, 2, seed)
+    assert (3, min(seeds.values()), (1.0).hex()) in _rows(res)
+
+
+def test_kmeans_tied_seeds_empty_cluster_vanishes(spark, monkeypatch):
+    """Two seeds with identical vectors: every member ties between them,
+    the lower cluster takes them all, and the other vanishes from the
+    centroids and the SSE."""
+    vecs = {d: {"a": 1.0} for d in range(1, 5)} | {5: {"b": 2.0}, 6: {"b": 2.0, "c": 0.5}}
+    seed = next(
+        s for s in range(100) if len(set(init_centroid_ids(6, 3, s)) & {1, 2, 3, 4}) == 2
+    )
+    res = _both_paths(spark, monkeypatch, _long_form(spark, vecs), k=3, max_iter=6, seed=seed)
+    _check_oracle(res, vecs, 3, 6, seed)
+    tied = sorted(c for d, c in init_centroid_ids(6, 3, seed).items() if d <= 4)
+    assert set(res.centroids) == set(res.sse) == {0, 1, 2} - {tied[1]}
+    assert {r["cluster"] for r in res.assignments.collect()} == set(res.centroids)
+
+
+def test_kmeans_adversarial_words_and_sparse_ids(spark, monkeypatch):
+    """Quotes, backslashes, control and non-ASCII characters (BMP and
+    astral) survive the centroid literal, on sparse and negative ids."""
+    words = ["it's", 'say "hi"', "back\\slash", '\\"', "tab\tx", "", "null", "café", "日本語", "😀"]
+    vecs = {}
+    for i, d in enumerate([-7, 3, 100, 205, 999, 1307, 2**40, 2**40 + 9]):
+        vecs[d] = {words[(i * j + j) % len(words)]: 0.1 * (i + 1) + j for j in range(1, 4)}
+    res = _both_paths(spark, monkeypatch, _long_form(spark, vecs), k=3, max_iter=5, seed=7)
+    _check_oracle(res, vecs, 3, 5, 7)
+    assert set().union(*res.centroids.values()) <= set(words)
+
+
+def test_kmeans_integer_words(spark):
+    """Non-string words, which the JSON centroid literal cannot key, take
+    the join path and give the same rows as their string spellings."""
+    rows = [(1, 1, 1.0), (2, 2, 1.0), (3, 1, 1.0), (3, 2, 1.0), (4, 2, 0.5), (5, 3, 2.0)]
+    ints = spark.createDataFrame(rows, "doc_id long, word int, weight double")
+    strs = spark.createDataFrame(
+        [(d, str(w), v) for d, w, v in rows], "doc_id long, word string, weight double"
+    )
+    a = kmeans(spark, ints, k=2, max_iter=4, seed=1)
+    b = kmeans(spark, strs, k=2, max_iter=4, seed=1)
+    assert _rows(a) == _rows(b)
+    assert {c: {str(w): v for w, v in vec.items()} for c, vec in a.centroids.items()} == b.centroids
+
+
+def test_kmeans_job_ceiling(spark, features):
+    """Job budget: a fixed init cost plus one aggregation per Lloyd step
+    (its shuffle-map job and the bounded collect). The features are
+    materialized first so their own TF-IDF jobs stay out of the count.
+    Measured init: the docs_vec checkpoint (2 jobs), the id statistics (2)
+    and the seed-centroid collect (1). A ceiling that may only tighten."""
+    init_jobs = 5
+    feats = features.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = f"kmeans-job-ceiling-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "kmeans job ceiling")
+    try:
+        res = kmeans(spark, feats, k=3, max_iter=10, seed=42)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert res.iterations > 1
+    assert jobs <= init_jobs + 2 * res.iterations, (jobs, res.iterations)
 
 
 def test_kmeans_fixedpoint_signed_features(spark):
